@@ -3,9 +3,10 @@ package graft.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -797,8 +798,50 @@ case class MatVec(child: Expression, matrix: Array[Array[Double]])
     copy(child = newChild)
 }
 
+/** A driver-computed double that stays a LEAF of the plan: not
+  * foldable, so Catalyst never turns it into a Java literal, and its
+  * generated code reads the value from ONE reference object (the
+  * [[NearestCentroid]]/[[MatVec]] posture). Plans that differ only in
+  * this value therefore generate the same source and share one
+  * compiled class — a `Literal` double is inlined as `1.0D` vs
+  * `0.9999999999999997D` and recompiles per value. */
+case class ConstDouble(value: Double) extends LeafExpression {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def prettyName: String = "const_double"
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("constDouble", java.lang.Double.valueOf(value))
+    ev.copy(code = code"final double ${ev.value} = $ref.doubleValue();",
+      isNull = FalseLiteral)
+  }
+}
+
 object VectorExpressions {
   private def expr(c: Column): Expression = GraftShims.expression(c)
+
+  /** A constant vector as the literal Catalyst folds `array(lit…)` into. */
+  private def vectorLiteral(v: Seq[Double]): Literal =
+    Literal(new GenericArrayData(v.toArray),
+      ArrayType(DoubleType, containsNull = false))
+
+  /** [[HyperplaneBucketExpr]] of a constant vector, evaluated on the
+    * driver: the same `eval` ConstantFolding runs on
+    * `hyperplaneBucket(array(lit…))`, so the same bits, and no job. */
+  def hyperplaneBucketOf(v: Seq[Double], bits: Int): Int =
+    HyperplaneBucketExpr(vectorLiteral(v), bits).eval().asInstanceOf[Int]
+
+  /** `sqrt(dot(v, v))` of a constant vector as a [[ConstDouble]] leaf:
+    * the value ConstantFolding would compute from `norm2(array(lit…))`,
+    * minus the per-value generated code. */
+  def constNorm2(v: Seq[Double]): Column = {
+    val p = vectorLiteral(v)
+    GraftShims.column(
+      ConstDouble(Sqrt(DotProductD(p, p)).eval().asInstanceOf[Double]))
+  }
 
   /** Column API over the codegen'd kernels. */
   def dotProduct(a: Column, b: Column): Column =

@@ -45,6 +45,15 @@ object VectorOps {
     * (absorbs last-ulp differences between fold implementations). */
   def cosine6(a: Column, b: Column): Column = round(cosine(a, b), 6)
 
+  /** [[cosine6]] against a constant probe — the same expression tree
+    * and the same doubles, but the probe's norm enters as a
+    * non-foldable leaf read from a reference object (the probe array
+    * already is one), so every probe compiles to the same generated
+    * class instead of recompiling per folded norm literal. */
+  def cosine6Probe(a: Column, probe: Seq[Double]): Column =
+    round(dot(a, array(probe.map(lit): _*)) /
+      (norm2(a) * graft.expressions.VectorExpressions.constNorm2(probe)), 6)
+
   /** Squared euclidean distance — codegen'd kernel (`L2DistSqD`), the
     * same sequential (a-b)² fold in double precision as the HOF form
     * below (bit-identical; asserted in VectorOpsSpec). */

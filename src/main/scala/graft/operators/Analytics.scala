@@ -119,17 +119,22 @@ object Analytics {
     * built-in `percentile` buffers EVERY row of a group inside one
     * aggregation buffer — a 100× group is an executor OOM, which is
     * why this query used to be documented fixture-only. This plan
-    * instead aggregates a per-(group, value) HISTOGRAM (map-side
-    * combinable; state ∝ distinct values, and duplicates collapse
-    * before the shuffle), then ranks it with a windowed running sum
-    * ordered by value — Spark's window sort is spill-able external
-    * sort, not a heap buffer — and selects the two bracketing values
-    * per percentile with conditional aggregates. Memory per task is
-    * bounded by the sort spill threshold regardless of group size;
-    * heavy duplication (the common case for prices/quantities at
-    * 100 TB) shrinks the histogram further. [[quantilesApprox]]
-    * remains the sketch alternative when a rank-error tolerance is
-    * acceptable. */
+    * instead ranks the RAW row stream with a cumulative count ordered
+    * by value: the ordered window's default RANGE frame counts ALL
+    * peers of the current value, so every copy carries exactly the
+    * cumulative count a per-(group, value) histogram would give, and a
+    * per-(group, value) peer count recovers the exclusive lower bound.
+    * Group totals are a broadcast join of a map-side-combined group
+    * aggregate; the two bracketing values per percentile are selected
+    * with conditional aggregates. One full-stream exchange (the
+    * window's), so shuffle volume is proportional to ROWS, not to
+    * distinct values — duplicates are no longer collapsed before the
+    * shuffle — but Spark's window sort is a spill-able external sort,
+    * not a heap buffer, so memory per task stays bounded by the spill
+    * threshold regardless of group size. [[quantilesFromHist]] keeps
+    * the histogram form for the streaming twin, whose state IS an
+    * additive histogram. [[quantilesApprox]] remains the sketch
+    * alternative when a rank-error tolerance is acceptable. */
   def quantiles(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     // r21 (the q174 raw-stream discipline): the cumulative count rides
     // the RAW row stream — the ordered window's default RANGE frame

@@ -13,9 +13,11 @@ import graft.functions.{TextOps, VectorOps}
   * kernel codegen'd, Catalyst re-inlining it per downstream reference
   * is cheaper than an extra shuffle (BenchOne sf0.1: 0.61 s vs 0.99 s
   * with the barrier). The probe embedding is a constant: it is
-  * evaluated ONCE on the driver (1-row local eval of the same column
-  * expression — bit-identical) and inlined as an array literal, so
-  * per-row work is one codegen'd dot product over attributes.
+  * evaluated ONCE on the driver (the same column expression,
+  * constant-folded — bit-identical, no job) and enters the plan as a
+  * constant ([[VectorOps.cosine6Probe]]), so per-row work is one
+  * codegen'd dot product over attributes and every probe text shares
+  * one compiled class.
   */
 object EmbedPipeline {
 
@@ -23,12 +25,15 @@ object EmbedPipeline {
     spark.sparkContext.defaultParallelism
 
   /** Evaluate the hash-embedding of a constant text on the driver —
-    * same column expression over a 1-row frame, so the result is
-    * bit-identical to a per-row evaluation. */
+    * the same column expression, constant-folded by the optimizer (the
+    * kernel's `eval`) and read off the optimized plan, so the result is
+    * bit-identical to a per-row evaluation and no job runs. */
   def probeVector(spark: SparkSession, text: String, dim: Int): Seq[Double] =
     spark.range(1)
       .select(VectorOps.hashEmbed(TextOps.words(lit(text)), dim).as("p"))
-      .head().getSeq[Double](0)
+      .queryExecution.optimizedPlan.expressions.head.eval()
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      .toDoubleArray().toSeq
 
   /** documents(textCol) → noise filter → chunk → embed → top-k cosine
     * vs `probeText`. Returns (idCols..., chunk_id, chunk_tokens, sim).
@@ -37,7 +42,6 @@ object EmbedPipeline {
       probeText: String, dim: Int, k: Int,
       idealTokens: Int = 32, chunkWords: Int = 24): DataFrame = {
     val probe = probeVector(spark, probeText, dim)
-    val probeNorm = math.sqrt(probe.map(x => x * x).sum) // == 1.0 (normalized), kept explicit
     val filtered = NoiseFilter(docs, textCol)
     val embedded = Chunker.chunk(filtered, textCol, idealTokens, chunkWords)
       // parallelize-first: single-row-group sources scan as 1 partition.
@@ -47,7 +51,7 @@ object EmbedPipeline {
       .repartition(par(spark), col("doc_id"))
       .withColumn("embedding",
         VectorOps.hashEmbed(TextOps.words(col("chunk_text")), dim))
-    rank(embedded, probe, probeNorm, k)
+    rank(embedded, probe, k)
   }
 
   /** The same flagship pipeline with the embed stage running through a
@@ -63,23 +67,18 @@ object EmbedPipeline {
       probeText: String, factory: EmbedTransportFactory, dim: Int, k: Int,
       idealTokens: Int = 32, chunkWords: Int = 24): DataFrame = {
     val probe = probeVector(spark, probeText, dim)
-    val probeNorm = math.sqrt(probe.map(x => x * x).sum)
     val filtered = NoiseFilter(docs, textCol)
     val chunked = Chunker.chunk(filtered, textCol, idealTokens, chunkWords)
       .repartition(par(spark), col("doc_id"))
     val embedded = ServiceEmbed.withEmbedding(chunked, "chunk_text", factory)
-    rank(embedded, probe, probeNorm, k)
+    rank(embedded, probe, k)
   }
 
   private def rank(embedded: DataFrame, probe: Seq[Double],
-      probeNorm: Double, k: Int): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
+      k: Int): DataFrame =
     embedded
-      .withColumn("sim", round(
-        VectorOps.dot(col("embedding"), probeCol)
-          / (VectorOps.norm2(col("embedding")) * lit(probeNorm)), 6))
+      .withColumn("sim", VectorOps.cosine6Probe(col("embedding"), probe))
       .select(col("doc_id"), col("chunk_id"), col("chunk_tokens"), col("sim"))
       .orderBy(col("sim").desc, col("doc_id"), col("chunk_id"))
       .limit(k)
-  }
 }

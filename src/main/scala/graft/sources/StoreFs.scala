@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Hadoop-`FileSystem` path operations shared by the crash-resumable
   * stores ([[SignatureStore]], `Packing`'s streaming state): every
@@ -25,18 +29,57 @@ private[graft] object StoreFs {
     * because schema inference on it would fail). */
   def hasCommittedData(spark: SparkSession, dir: String): Boolean = {
     val (fs, p) = fileSystem(spark, dir)
-    // Spark's visibility rule: `_`/`.`-prefixed names are hidden UNLESS
-    // they contain `=` — a partition directory like `__batch_id=0` is
-    // data, `_temporary`/`_SUCCESS` are not
-    def visible(n: String): Boolean =
-      !(n.startsWith("_") || n.startsWith(".")) || n.contains("=")
-    def walk(path: Path): Boolean =
-      fs.listStatus(path).exists { st =>
-        val n = st.getPath.getName
-        visible(n) && (st.isFile || walk(st.getPath))
-      }
-    fs.exists(p) && walk(p)
+    fs.exists(p) && firstDataFile(fs, fs.getFileStatus(p)).isDefined
   }
+
+  // Spark's visibility rule: `_`/`.`-prefixed names are hidden UNLESS
+  // they contain `=` — a partition directory like `__batch_id=0` is
+  // data, `_temporary`/`_SUCCESS` are not
+  private def visible(n: String): Boolean =
+    !(n.startsWith("_") || n.startsWith(".")) || n.contains("=")
+
+  /** The first committed data file at or under `st`, depth-first. */
+  private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
+    if (st.isFile) Some(st)
+    else fs.listStatus(st.getPath).iterator
+      .filter(c => visible(c.getPath.getName))
+      .flatMap(firstDataFile(fs, _)).nextOption()
+
+  /** The data schema Spark wrote into the footer of the first data file
+    * under `paths` (`org.apache.spark.sql.parquet.row.metadata` — the
+    * key Parquet schema inference reads too), read on the driver. None
+    * when no path holds a data file or the footer carries no Spark
+    * schema (a foreign writer). */
+  def footerSchema(spark: SparkSession, paths: String*): Option[StructType] =
+    paths.iterator.flatMap { dir =>
+      val (fs, p) = fileSystem(spark, dir)
+      if (!fs.exists(p)) None
+      else firstDataFile(fs, fs.getFileStatus(p)).map(fs -> _)
+    }.nextOption().flatMap { case (fs, st) =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, fs.getConf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      Option(footer.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+    }
+
+  /** `spark.read.parquet(paths: _*)` without Parquet's schema-inference
+    * job: the [[footerSchema]] is handed to `spark.read.schema`, so
+    * building the DataFrame runs no Spark job. Partition columns are
+    * still inferred from the directory names (the schema names data
+    * columns only), so partition pruning is unchanged. Falls back to
+    * inference when there is no footer schema — including an absent
+    * path, which then fails as before (PATH_NOT_FOUND). A data file
+    * renamed away between listing and footer read (a racing compaction
+    * swap) throws FileNotFoundException; both stay recoverable under
+    * [[retryingRead]]. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths: _*) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
 
   /** Names of `dir`'s immediate children; empty when `dir` is absent. */
   def childNames(spark: SparkSession, dir: String): Seq[String] = {

@@ -102,7 +102,7 @@ object VectorStore {
     StoreFs.failIfLeased(spark, lockPath(path), "VectorStore delete")
     val dir = tombstoneDir(path)
     if (StoreFs.hasCommittedData(spark, dir)) {
-      val existing = spark.read.parquet(dir).columns.head
+      val existing = StoreFs.readParquet(spark, dir).columns.head
       require(existing == ids.columns.head,
         s"tombstone id column mismatch: store has '$existing', " +
           s"delete got '${ids.columns.head}'")
@@ -115,12 +115,15 @@ object VectorStore {
   /** The pending tombstone set (one column, the store's id column
     * name), or None when no delete is pending. Bounded by deletes
     * since the last compaction — the broadcast in the probes' anti-
-    * join is the same bounded-set bet the hot-key caches make. */
+    * join is the same bounded-set bet the hot-key caches make. Read
+    * with the footer schema ([[StoreFs.readParquet]]): a probe with
+    * deletes pending, and a delete's id-column check, run no job to
+    * build their plans. */
   private[graft] def tombstones(spark: SparkSession,
       path: String): Option[DataFrame] = {
     val dir = tombstoneDir(path)
     if (StoreFs.hasCommittedData(spark, dir))
-      Some(spark.read.parquet(dir).distinct())
+      Some(StoreFs.readParquet(spark, dir).distinct())
     else None
   }
 
@@ -167,7 +170,7 @@ object VectorStore {
       tsFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     val dead =
       if (tsFiles.isEmpty) None
-      else Some(spark.read.parquet(tsFiles: _*).distinct())
+      else Some(StoreFs.readParquet(spark, tsFiles: _*).distinct())
     val rescueLateTombstones: () => Unit =
       () => StoreFs.rescueLateTombstones(spark, path, snapNames)
     SignatureStore.stageAndSwap(spark, path, rescueLateTombstones) {
@@ -214,33 +217,37 @@ object VectorStore {
 
   /** The probe's bucket plus its `1+nBits` hamming≤1 neighbors —
     * multi-probe compensates for boundary vectors the way the
-    * in-memory LSH path's extra bands do. */
+    * in-memory LSH path's extra bands do. The bucket kernel is
+    * evaluated on the driver over the probe literal (the same `eval`
+    * constant folding would run inside a one-row job), so no job runs;
+    * `spark` is no longer needed and stays for source compatibility. */
   def probeBuckets(spark: SparkSession, probe: Seq[Double], nBits: Int = 4): Seq[Int] = {
-    val vec = array(probe.map(lit): _*)
-    val b = spark.range(1).select(bucketOf(vec, nBits).as("b")).head().getInt(0)
+    val b = graft.expressions.VectorExpressions.hyperplaneBucketOf(probe, nBits)
     b +: (0 until nBits).map(i => b ^ (1 << i))
   }
 
   /** Read ONLY the probe's bucket directories — the filter on the
     * partition column never touches row data (no bucket column exists
     * inside the files), so the scan's `PartitionFilters` does all the
-    * work and pruned directories are never opened. */
+    * work and pruned directories are never opened. The data schema
+    * comes from one file's footer ([[StoreFs.readParquet]]) instead of
+    * an inference job; the store is still listed on every call, so
+    * appends and deletes are visible to the next probe. */
   def readCandidates(spark: SparkSession, path: String,
       buckets: Seq[Int]): DataFrame =
-    spark.read.parquet(path).filter(col("bucket").isin(buckets: _*))
+    StoreFs.readParquet(spark, path).filter(col("bucket").isin(buckets: _*))
 
   /** End-to-end probe: top-k by exact cosine over the pruned candidate
-    * set. */
+    * set. Building the DataFrame runs no Spark job (driver-side
+    * buckets, footer schema), and every probe generates the same code
+    * ([[VectorOps.cosine6Probe]]), so a warm probe compiles nothing. */
   def topK(spark: SparkSession, path: String, idCol: String, vecCol: String,
-      probe: Seq[Double], k: Int, nBits: Int = 4): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
+      probe: Seq[Double], k: Int, nBits: Int = 4): DataFrame =
     withoutDeleted(spark, path,
         readCandidates(spark, path, probeBuckets(spark, probe, nBits)), idCol)
-      .select(col(idCol),
-        VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
+      .select(col(idCol), VectorOps.cosine6Probe(col(vecCol), probe).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
-  }
 
   // --- int8-quantized store (4× smaller on disk) ----------------------
 
@@ -287,13 +294,10 @@ object VectorStore {
     * the quantization error bound (scale/2 per dimension). */
   def topKQuantized(spark: SparkSession, path: String, source: DataFrame,
       idCol: String, vecCol: String, probe: Seq[Double], k: Int,
-      m: Int, nBits: Int = 4): DataFrame = {
-    val probeCol = array(probe.map(lit): _*)
-    val approx = topKQuantizedApprox(spark, path, idCol, probe, m, nBits)
-    approx.join(source.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol),
-        VectorOps.cosine6(col(vecCol), probeCol).as("sim"))
+      m: Int, nBits: Int = 4): DataFrame =
+    topKQuantizedApprox(spark, path, idCol, probe, m, nBits)
+      .join(source.select(col(idCol), col(vecCol)), Seq(idCol))
+      .select(col(idCol), VectorOps.cosine6Probe(col(vecCol), probe).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
       .limit(k)
-  }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftShims, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -62,12 +62,14 @@ object PlanDump {
         try {
           val df = fn(spark, sfDir)
           if (executed) {
+            // listener delivery is asynchronous (the listener bus): drain
+            // it so a construction-time sub-query's event (eager
+            // localCheckpoint/collect) lands BEFORE the reset, and again
+            // so the save's own event has landed before it is read
+            GraftShims.drainListenerBus(spark)
             lastQe = null
             df.write.format("noop").mode("overwrite").save()
-            // listener delivery is same-thread for the write path, but
-            // give the bus a beat in case it ever is not
-            var waited = 0
-            while (lastQe == null && waited < 50) { Thread.sleep(100); waited += 1 }
+            GraftShims.drainListenerBus(spark)
             if (lastQe == null) "NO EXECUTION CAPTURED"
             else lastQe.explainString(
               org.apache.spark.sql.execution.FormattedMode)

@@ -174,4 +174,19 @@ class PipelineE2ESpec extends SparkSpec {
     // token conservation across the whole pipeline
     assert(declared.map(_._2).sum === toks.map(_._2.length.toLong).sum)
   }
+
+  test("probeVector runs no Spark job and equals the one-row job's evaluation") {
+    val text = "query filter join aggregate window shuffle"
+    val (probe, jobs) = jobsRunBy(EmbedPipeline.probeVector(spark, text, 64))
+    assert(jobs === 0)
+    val viaJob = spark.range(1)
+      .select(VectorOps.hashEmbed(TextOps.words(lit(text)), 64))
+      .head().getSeq[Double](0)
+    assert(probe === viaJob)
+    // and the codegen'd per-row evaluation over a column
+    val perRow = spark.sparkContext.parallelize(Seq(text), 1).toDF("t")
+      .select(VectorOps.hashEmbed(TextOps.words($"t"), 64))
+      .head().getSeq[Double](0)
+    assert(probe === perRow)
+  }
 }

@@ -1,9 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
-import graft.sources.VectorStore
+import graft.sources.{StoreFs, VectorStore}
 
 /** Persisted partition-pruned vector store (sources/VectorStore.scala):
   * the disk layout must round-trip losslessly, the probe read must
@@ -227,5 +228,100 @@ class VectorStoreSpec extends SparkSpec {
       .limit(10).as[(Long, Double)].collect().toSeq
     assert(got === expected)
     assert(got.head === ((0L, 1.0))) // the probe's own row is never pruned away
+  }
+
+  private def storeVector(id: Long): Seq[Double] =
+    Tables.embeddings(spark, sf).filter($"vec_id" === id)
+      .select($"embedding").head().getSeq[Float](0).map(_.toDouble).toSeq
+
+  test("topK construction runs no Spark job, with and without pending tombstones") {
+    val probe = storeVector(0)
+    val (df, jobs) = jobsRunBy(
+      VectorStore.topK(spark, path, "vec_id", "embedding", probe, 5, nBits))
+    assert(jobs === 0)
+    assert(df.as[(Long, Double)].collect().head === ((0L, 1.0)))
+
+    val dir = Files.createTempDirectory("graft_vs_jobs").toString
+    VectorStore.write(Tables.embeddings(spark, sf), "vec_id", "embedding", dir, nBits)
+    VectorStore.delete(spark, dir, Seq(0L).toDF("vec_id"))
+    val (masked, maskedJobs) = jobsRunBy(
+      VectorStore.topK(spark, dir, "vec_id", "embedding", probe, 5, nBits))
+    assert(maskedJobs === 0)
+    assert(!masked.as[(Long, Double)].collect().exists(_._1 == 0L))
+  }
+
+  test("every probe generates the same code (the probe norm is not a folded literal)") {
+    // norms 1 and 3: a folded norm literal would differ in the source
+    val probes = Seq(storeVector(0), storeVector(1).map(_ * 3.0))
+    val codes = probes.map { p =>
+      val df = VectorStore.topK(spark, path, "vec_id", "embedding", p, 5, nBits)
+      df.collect() // the adaptive plan holds its codegen stages once executed
+      df.queryExecution.debug.codegenToSeq().map(_._2)
+    }
+    assert(codes.head.nonEmpty)
+    assert(codes.head === codes(1))
+  }
+
+  test("driver-side probeBuckets equals the column-evaluated bucket " +
+      "(200 seeded probes incl. a zero vector, double[] and float[] columns; " +
+      "every row of the float[] store)") {
+    val dim = 64
+    val rng = new scala.util.Random(20261017L)
+    val probes = Seq.fill(dim)(0.0) +: Seq.fill(199)(Seq.fill(dim)(rng.nextGaussian()))
+    val rows = spark.sparkContext
+      .parallelize(probes.zipWithIndex.map { case (p, i) =>
+        (i, p.toArray, p.map(_.toFloat).toArray)
+      }, 4)
+      .toDF("i", "d", "f")
+      .select($"i", VectorStore.bucketOf($"d", nBits), VectorStore.bucketOf($"f", nBits))
+      .as[(Int, Int, Int)].collect()
+    assert(rows.length === 200)
+    rows.foreach { case (i, bd, bf) =>
+      assert(VectorStore.probeBuckets(spark, probes(i), nBits).head === bd, s"probe $i")
+      assert(VectorStore.probeBuckets(spark, probes(i).map(_.toFloat.toDouble),
+        nBits).head === bf, s"probe $i as float[]")
+    }
+    // the float[]-typed store: each row sits in its probe bucket's directory
+    spark.read.parquet(path).orderBy($"vec_id").limit(200)
+      .select($"embedding", $"bucket").collect().foreach { r =>
+        val v = r.getSeq[Float](0).map(_.toDouble)
+        assert(VectorStore.probeBuckets(spark, v, nBits).head === r.getInt(1))
+      }
+  }
+
+  test("footer schema equals the inferred schema (store, quantized store, tombstones)") {
+    val qdir = Files.createTempDirectory("graft_vs_fq").toString
+    VectorStore.writeQuantized(Tables.embeddings(spark, sf), "vec_id", "embedding",
+      qdir, nBits)
+    val dir = Files.createTempDirectory("graft_vs_fd").toString
+    VectorStore.write(Tables.embeddings(spark, sf), "vec_id", "embedding", dir, nBits)
+    VectorStore.delete(spark, dir, Seq(3L, 4L).toDF("vec_id"))
+    Seq(path, qdir, dir + "/_tombstones").foreach { p =>
+      assert(StoreFs.footerSchema(spark, p).isDefined, p)
+      val (df, jobs) = jobsRunBy(StoreFs.readParquet(spark, p))
+      assert(jobs === 0, p)
+      assert(df.schema === spark.read.parquet(p).schema, p)
+    }
+    // the partition column is still inferred from the directory names
+    assert(StoreFs.readParquet(spark, path).schema.last.name === "bucket")
+    assert(StoreFs.footerSchema(spark, path).get.fieldNames.toSeq ===
+      Seq("vec_id", "embedding"))
+  }
+
+  test("footer schema falls back to inference when the store has no data file") {
+    val empty = Files.createTempDirectory("graft_vs_empty")
+    Files.createFile(empty.resolve("_SUCCESS"))
+    Files.createDirectories(empty.resolve("_temporary/0"))
+    assert(StoreFs.footerSchema(spark, empty.toString).isEmpty)
+    val inferred = intercept[AnalysisException](spark.read.parquet(empty.toString))
+    val viaHelper = intercept[AnalysisException](StoreFs.readParquet(spark, empty.toString))
+    assert(viaHelper.getCondition === inferred.getCondition)
+    // absent store (a compaction swap's no-live window): the same
+    // PATH_NOT_FOUND error withReadRetry classifies as recoverable
+    val absent = empty.resolve("gone").toString
+    assert(StoreFs.footerSchema(spark, absent).isEmpty)
+    val e = intercept[AnalysisException](StoreFs.readParquet(spark, absent))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+    assert(VectorStore.tombstones(spark, empty.toString).isEmpty)
   }
 }
